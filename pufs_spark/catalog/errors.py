@@ -43,3 +43,9 @@ class StaleReadError(CatalogError):
     generation/etag no longer matches the backing object (reference
     fails such reads via GenerationMatch conditions, remote/gcs.go:302-331,
     and If-Match, remote/http.go:24)."""
+
+
+class MirrorFormatError(CatalogError):
+    """A catalog mirror's published state is not in the format the
+    current fold writes (streaming/mirror.py). The mirror is derived
+    data: it is rebuilt from the commit log, never migrated in place."""

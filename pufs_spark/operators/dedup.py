@@ -88,6 +88,27 @@ def _parse_mem(s: str) -> int:
     return int(s)
 
 
+def _scan_bytes(df: DataFrame) -> int | None:
+    """Sum of the on-disk bytes of ``df``'s leaf file scans (driver-
+    side ``os.stat`` over ``inputFiles()`` — one plan analysis, no
+    job). None for non-file-rooted or unstatable (remote) inputs."""
+    import os
+
+    try:
+        files = df.inputFiles()
+    except Exception:  # noqa: BLE001 — sizing is advisory
+        return None
+    if not files:
+        return None
+    total = 0
+    for f in files:
+        try:
+            total += os.path.getsize(f[5:] if f.startswith("file:") else f)
+        except OSError:
+            return None
+    return total
+
+
 def _persist_spread(df: DataFrame, key: str) -> DataFrame:
     """Persist with a PINNED layout: hash-partitioned on ``key``. A
     bare ``persist()`` caches whatever partitioning AQE planned, and
@@ -108,10 +129,8 @@ def _persist_spread(df: DataFrame, key: str) -> DataFrame:
     and capped at 4x cores (the r13 sf10 measured-best): sf0.1 ->
     cores, sf10 -> 4x cores, monotone between; non-file-rooted frames
     keep the scale-safe cap."""
-    from pufs_spark.operators.util import _estimated_scan_bytes
-
     cores = df.sparkSession.sparkContext.defaultParallelism
-    src_bytes = _estimated_scan_bytes(df)
+    src_bytes = _scan_bytes(df)
     if src_bytes is None:
         par = 4 * cores
     else:

@@ -27,13 +27,14 @@ STOPWORDS = {
 # interpolated as raw single-quoted SQL literals, so a future word
 # containing a quote/backslash (French "l'") would become a parse error
 # or a wrong predicate. Fail at import, next to the data, not at the
-# call site.
+# call site. A raise, not an assert, so the guard survives python -O.
 for _words in STOPWORDS.values():
     for _w in _words:
-        assert _w.isascii() and _w.isalpha() and _w.islower(), (
-            f"stopword {_w!r} is not a bare [a-z]+ word; the F.expr "
-            "literal interpolation in quality_stats/lang_id would break"
-        )
+        if not (_w.isascii() and _w.isalpha() and _w.islower()):
+            raise ValueError(
+                f"stopword {_w!r} is not a bare [a-z]+ word; the F.expr "
+                "literal interpolation in quality_stats/lang_id would break"
+            )
 
 
 def tokens_col(text_col: str = "text"):
@@ -133,6 +134,13 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     this the most compute-dense expression pipeline in text.py (sf1.0
     T2 measured 6.6s on 2 of 32 cores — the suite's slowest query
     after the r11 D1 fix)."""
+    # collision-resistant working name (ADVICE r15): an input frame
+    # that already carries `_toks` must not be silently overwritten
+    if "__pufs_toks" in df.columns:
+        raise ValueError(
+            "lang_id: input already has a '__pufs_toks' column, the "
+            "operator's working column"
+        )
     from pufs_spark.operators.util import spread_for_compute
 
     df = spread_for_compute(df)
@@ -146,9 +154,6 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
             f"size(filter(__pufs_toks, t -> array_contains(array({wl}), t)))"
         )
 
-    # collision-resistant working name (ADVICE r15): an input frame
-    # that already carries `_toks` must not be silently overwritten
-    assert "__pufs_toks" not in df.columns
     out = df.withColumn("__pufs_toks", toks)
     for lang, words in STOPWORDS.items():
         out = out.withColumn(f"_hits_{lang}", hits(words))

@@ -186,7 +186,7 @@ def _freeze_dirs_single_task(
         # them BEFORE the catalog-sized groupBy, not after. Without
         # this, a 0%-dirty freeze paid the same file-lines shuffle as
         # a full one (measured 5.4 s vs 5.4 s at sf1.0, r12
-        # tools/profile_f1_stages.py); with it, the shuffle is
+        # tools/out/profile_f1_stages_r12*.json); with it, the shuffle is
         # O(dirty files). The dirty set is dir-count-bounded (≤ the
         # single-task precondition) and broadcast, so the prune is a
         # map-side hash filter — no extra exchange.
@@ -466,9 +466,10 @@ def _freeze_dirs_levelwise(
 
 
 # Dirty-DIR fraction past which a memoized freeze runs the full plan
-# instead: measured crossover at sf1.0 (tools/profile_f1_crossover.py,
-# r13) — memoized ties full up to ~40% dirty dirs and loses ~1.7x by
-# ~65%; 0.5 splits the measured bracket.
+# instead: measured crossover at sf1.0 (r13, BASELINE.md and
+# tools/out/profile_f1_crossover_r13.json) — memoized ties full up to
+# ~40% dirty dirs and loses ~1.7x by ~65%; 0.5 splits the measured
+# bracket.
 _MEMO_MAX_DIRTY_FRAC = 0.5
 
 
@@ -561,8 +562,8 @@ def freeze_nodes_df(
     ).first()
     n_dirs = gate_row["n"] or 0
     n_files = gate_row["n_files"] or 0
-    # Auto-switch (r13 crossover, tools/profile_f1_crossover.py /
-    # BASELINE.md): the dirty-prune's broadcasts and semi-joins are
+    # Auto-switch (r13 crossover, tools/out/profile_f1_crossover_r13.json
+    # / BASELINE.md): the dirty-prune's broadcasts and semi-joins are
     # pure overhead once most dirs re-hash anyway — at sf1.0 the
     # memoized plan ties the full freeze up to ~40% dirty DIRS and
     # loses ~1.7x by ~65% (10% dirty FILES: each leaf dir holds ~10

@@ -173,12 +173,15 @@ class MirrorStore:
     stat() touch NO data buckets at all: the fold maintains per-bucket
     (nodes, dirs, files, bytes) totals in the mirror meta and the
     depth-1 entries in a rootdir sidecar, so both ops are meta-sized
-    reads (the every-bucket sweep survives only for states published
-    before the aggregates existed). The cache is a
-    byte-capped LRU (``max_cache_bytes``, default 1 GiB): the server's
-    resident memory is O(cap) even when the request mix eventually
-    touches every bucket of a 10M-inode catalog — an evicted bucket
-    rebuilds from one parquet read.
+    reads. The cache is a byte-capped LRU (``max_cache_bytes``, default
+    1 GiB): the server's resident memory is O(cap) even when the
+    request mix eventually touches every bucket of a 10M-inode catalog
+    — an evicted bucket rebuilds from one parquet read.
+
+    One cache-miss policy: when the state's estimated decoded size fits
+    the cap, a miss decodes the bucket into the cache; when it does not
+    (``MirrorSnapshot.point_reads``), a miss is a filtered parquet read
+    and a bucket enters the cache only through hot-bucket admission.
 
     Consistency: every query runs against a ``snapshot()`` — version,
     state dir, bucket count, and top-group summary resolved from ONE
@@ -199,30 +202,19 @@ class MirrorStore:
     # closed round 7, relocated into the server.
     DEFAULT_CACHE_BYTES = 1 << 30  # 1 GiB of estimated decoded dicts
 
-    # Parquet-size threshold above which a cache MISS serves point
-    # lookups / single-dir listings via a FILTERED parquet read
-    # (pyarrow predicate pushdown) instead of decoding the whole
-    # bucket into the cache. Decoding a 150k-row bucket costs ~1-2 s
-    # of Python object materialization and evicts ~50 MB of hot
-    # entries — measured at 10M inodes / 64 buckets, where uniform
+    # Point-read mode: when the state's ESTIMATED decoded size (from
+    # the fold-maintained per-bucket node totals) exceeds the cache
+    # cap, caching would thrash by construction — decoding a 150k-row
+    # bucket costs ~1-2 s of Python object materialization and evicts
+    # ~50 MB of hot entries; at 10M inodes / 64 buckets uniform
     # getattr traffic collapsed to ~1 qps from LRU thrash (r9 bench).
-    # A filtered read touches only the matching row group(s) and
-    # materializes only the matching rows (~ms), and never pollutes
-    # the cache. Small buckets (every properly re-bucketed mirror)
-    # keep the decode-and-cache fast path: a warm dict hit is ~0.1 ms,
-    # unbeatable when the working set fits the cap.
+    # Every miss then serves lookups / listings via a FILTERED parquet
+    # read (pyarrow predicate pushdown: only the matching row group(s)
+    # and rows, ~ms, no cache insert). MirrorSnapshot computes the
+    # flag once per request from the meta it already read. When the
+    # decoded state fits the cap, every bucket fits too, and misses
+    # keep the decode-and-cache path: a warm dict hit is ~0.1 ms.
     #
-    # Parquet size alone under-triggers — sorted paths compress ~20×,
-    # so a 50 MB-decoded bucket can sit under any sane on-disk
-    # threshold (the 10M bench's buckets were ~2 MB each). The PRIMARY
-    # trigger is therefore snapshot-wide: when the state's ESTIMATED
-    # decoded size (from the fold-maintained per-bucket node totals)
-    # exceeds the cache cap, caching would thrash by construction and
-    # every miss takes the filtered-read path (MirrorSnapshot computes
-    # this once per request from the meta it already read). The
-    # on-disk threshold stays as the fallback for legacy states
-    # without totals and as a single-pathological-bucket guard.
-    POINT_READ_PARQUET_BYTES = 4 << 20
     # Estimated decoded bytes per catalog row (dict/tuple overhead +
     # twice the path text at typical path lengths) — matches
     # _entry_bytes' accounting, used with the meta's per-bucket node
@@ -280,19 +272,10 @@ class MirrorStore:
     # actual-size check — bounding the estimate is the only way to
     # avoid paying it).
     EST_MIN_DECODE_RATIO = 4.0
-    # Escape hatch (and the bench's A/B switch): False disables the
-    # delta-sidecar cache patch, reverting folds to invalidate-and-
-    # reload for the buckets they touch.
-    DELTA_PATCH_ENABLED = True
 
     def __init__(self, mirror_dir: str, max_cache_bytes: int | None = None,
-                 point_read_bytes: int | None = None,
                  calibrate: bool = False):
         self.mirror_dir = mirror_dir
-        self.point_read_bytes = (
-            self.POINT_READ_PARQUET_BYTES if point_read_bytes is None
-            else point_read_bytes
-        )
         # file → (sig, rows, kids, est): rows is path → (is_dir, size,
         # bid); kids is parent-path → [(name, row)] so a listing reads
         # its result directly instead of scanning every row in the
@@ -445,8 +428,8 @@ class MirrorStore:
         one smallest-bucket decode + one filtered read): decode the
         smallest bucket for µs/row, filtered-read one row of the
         largest for ms/read. Seeds the same EWMAs the passive path
-        feeds, so a store that never organically decodes (every bucket
-        oversized, thresholds mis-seeded high) still starts from ITS
+        feeds, so a store that never organically decodes (point-read
+        mode, thresholds mis-seeded high) still starts from ITS
         OWN storage's numbers instead of another box's constants.
         Returns the measured dict, or None when no state exists."""
         import os as _os
@@ -618,7 +601,8 @@ class MirrorStore:
     def snapshot(self) -> "MirrorSnapshot":
         """A consistent view of the CURRENT state: one meta read pins
         (version, state dir, n_buckets, summary, per-bucket totals)
-        for the request's lifetime."""
+        for the request's lifetime. A state in an old format raises
+        MirrorFormatError."""
         from pufs_spark.streaming import mirror as M
 
         v, state_dir, n_buckets, summary, totals = M._resolve_state_ex(
@@ -634,7 +618,6 @@ class MirrorStore:
 
     def _bucket_entry(
         self, state_dir: str, fname: str, no_evict: bool = False,
-        admission_est: int | None = None,
     ) -> tuple[dict, dict]:
         import os as _os
 
@@ -702,9 +685,6 @@ class MirrorStore:
                 with self._lock:
                     self._point_freq[fname] = self.POINT_ADMIT_CEIL
         return rows, kids
-
-    def _bucket_rows(self, state_dir: str, fname: str) -> dict:
-        return self._bucket_entry(state_dir, fname)[0]
 
     def _stat_sig(self, f: str):
         import os as _os
@@ -830,8 +810,6 @@ class MirrorStore:
         state file afterwards re-caches the OLD version — the next
         new-snapshot access just patches it forward again (the sidecar
         stays on disk), so the regression self-heals."""
-        if not self.DELTA_PATCH_ENABLED:
-            return None
         import os as _os
 
         loaded = self._load_delta(state_dir)
@@ -943,7 +921,7 @@ class MirrorStore:
             min(self.POINT_ADMIT_CEIL, int(breakeven)),
         )
 
-    def _admission_est(self, fname: str, sig, admit_est: int | None) -> int:
+    def _admission_est(self, fname: str, sig, admit_est: int) -> int:
         """The decoded-size estimate admission checks against headroom.
 
         Preference order (ADVICE r11): (1) the bucket's own measured
@@ -952,15 +930,13 @@ class MirrorStore:
         directions, so a bucket whose real decode ratio sits below the
         EST_MIN_DECODE_RATIO floor is no longer permanently barred from
         a cache it fits; (2) the fold-maintained per-row estimate
-        (``admit_est``) or, for legacy states, parquet size × 25 —
-        both floored at parquet size × EST_MIN_DECODE_RATIO so a stale
-        or corrupted tiny estimate on a never-measured giant bucket
-        can't stall the request thread on a hopeless decode."""
+        (``admit_est``), floored at parquet size × EST_MIN_DECODE_RATIO
+        so a stale or corrupted tiny estimate on a never-measured giant
+        bucket can't stall the request thread on a hopeless decode."""
         m = self._measured_bytes.get(fname)
         if m is not None and m[0] > 0:
             return max(1, int(m[1] * sig[2] / m[0]))
-        est = admit_est if admit_est is not None else sig[2] * 25
-        return max(est, int(sig[2] * self.EST_MIN_DECODE_RATIO))
+        return max(admit_est, int(sig[2] * self.EST_MIN_DECODE_RATIO))
 
     def _note_point_read(self, fname: str, est: int) -> bool:
         """Record one point read against ``fname``; True = admit the
@@ -1000,20 +976,18 @@ class MirrorStore:
 
     def _point_lookup(
         self, state_dir: str, fname: str, path: str,
-        force_point: bool = False, admit_est: int | None = None,
+        point_reads: bool, admit_est: int,
     ):
         """One path's (is_dir, size, bid) or None. Cached bucket →
-        dict hit; oversized uncached bucket (or ``force_point``, the
-        snapshot's decoded-state-exceeds-cap signal) → FILTERED
-        parquet read (row-group pruned — bucket files are path-sorted
-        — and no cache insert, so a scan-shaped miss can't evict hot
-        entries) unless the bucket has proven hot and fits the free
-        headroom (``_note_point_read`` admission → decode-and-cache
-        once, warm-dict speed after); small uncached →
-        decode-and-cache as before. ``admit_est`` is the snapshot's
-        estimated decoded size from the fold-maintained totals; when
-        absent (legacy state) the parquet size × 25 stands in
-        (sorted paths compress ~20-25×, r9 bench)."""
+        dict hit; uncached under ``point_reads`` (the snapshot's
+        decoded-state-exceeds-cap flag) → FILTERED parquet read
+        (row-group pruned — bucket files are path-sorted — and no
+        cache insert, so a scan-shaped miss can't evict hot entries)
+        unless the bucket has proven hot and fits the free headroom
+        (``_note_point_read`` admission → decode-and-cache once,
+        warm-dict speed after); otherwise uncached → decode-and-cache.
+        ``admit_est`` is the bucket's estimated decoded size from the
+        fold-maintained totals."""
         import os as _os
 
         import pyarrow.parquet as pq
@@ -1028,11 +1002,11 @@ class MirrorStore:
         hit = self._cache_hit(fname, sig, state_dir)
         if hit is not None:
             return hit[0].get(path)
-        if force_point or sig[2] > self.point_read_bytes:
+        if point_reads:
             est = self._admission_est(fname, sig, admit_est)
             if self._note_point_read(fname, est):
                 return self._bucket_entry(
-                    state_dir, fname, no_evict=True, admission_est=est
+                    state_dir, fname, no_evict=True
                 )[0].get(path)
             with self._lock:
                 self._stats["point_reads"] += 1
@@ -1052,14 +1026,13 @@ class MirrorStore:
 
     def _dir_children(
         self, state_dir: str, fname: str, parent: str,
-        force_point: bool = False, admit_est: int | None = None,
+        point_reads: bool, admit_est: int,
     ) -> list[tuple[str, tuple]]:
         """One bucket's direct children of ``parent``. Cached → kids
-        index; oversized uncached (or ``force_point``) → prefix-range
-        filtered read (the subtree shares the ``parent + '/'`` prefix;
-        '0' is the successor byte of '/'), with the same hot-bucket
-        admission as ``_point_lookup``; small uncached →
-        decode-and-cache."""
+        index; uncached under ``point_reads`` → prefix-range filtered
+        read (the subtree shares the ``parent + '/'`` prefix; '0' is
+        the successor byte of '/'), with the same hot-bucket admission
+        as ``_point_lookup``; otherwise uncached → decode-and-cache."""
         import os as _os
 
         import pyarrow.parquet as pq
@@ -1074,12 +1047,12 @@ class MirrorStore:
         hit = self._cache_hit(fname, sig, state_dir)
         if hit is not None:
             return list(hit[1].get(parent, ()))
-        if force_point or sig[2] > self.point_read_bytes:
+        if point_reads:
             est = self._admission_est(fname, sig, admit_est)
             if self._note_point_read(fname, est):
                 return list(
                     self._bucket_entry(
-                        state_dir, fname, no_evict=True, admission_est=est
+                        state_dir, fname, no_evict=True
                     )[1].get(parent, ())
                 )
             lo = "/" if parent == "/" else parent + "/"
@@ -1108,14 +1081,14 @@ class MirrorStore:
 
     def _dir_children_multi(
         self, state_dir: str, fnames: list[str], parent: str,
-        force_point: bool = False,
+        point_reads: bool,
     ) -> list[tuple[str, tuple]]:
         """Direct children of ``parent`` across MANY buckets (depth-1
         listings: the dir's children spread over every bucket its
         top-group summary names). Cached buckets answer from their
-        kids index; small uncached ones decode-and-cache; all
-        remaining point-read buckets are served by ONE
-        pyarrow.dataset scan with the prefix-range filter —
+        kids index; outside ``point_reads`` uncached ones
+        decode-and-cache; under it, all uncached buckets are served
+        by ONE pyarrow.dataset scan with the prefix-range filter —
         row-group-pruned like the per-bucket path, but parallel
         across files in Arrow's C++ thread pool with the GIL
         released. The first 10M run paid 64 SEQUENTIAL filtered
@@ -1145,7 +1118,7 @@ class MirrorStore:
             if hit is not None:
                 out.extend(hit[1].get(parent, ()))
                 continue
-            if force_point or sig[2] > self.point_read_bytes:
+            if point_reads:
                 batch.append(f)
             else:
                 out.extend(
@@ -1170,30 +1143,26 @@ class MirrorStore:
                     out.append((name, (d, s, b)))
         return out
 
-    def _root_entries(self, state_dir: str) -> list[tuple[str, tuple]] | None:
+    def _root_entries(self, state_dir: str) -> list[tuple[str, tuple]]:
         """The root listing from the state dir's rootdir sidecar —
         fold-maintained depth-1 entries, so "/" never faults in data
-        buckets. None when the state predates the sidecar (callers
-        fall back to the bucket sweep). Cached by the sidecar file's
-        signature; at most {current, previous} state dirs exist, so
-        the cache is pruned to the 4 most recent keys."""
+        buckets. A sidecar missing because the state dir was pruned
+        under the reader raises FileNotFoundError (MirrorService
+        retries). Cached by the sidecar file's signature; at most
+        {current, previous} state dirs exist, so the cache is pruned
+        to the 4 most recent keys."""
         import os as _os
 
         from pufs_spark.streaming import mirror as M
 
         f = _os.path.join(state_dir, M.ROOTDIR_FILE)
-        try:
-            st = _os.stat(f)
-        except FileNotFoundError:
-            return None
+        st = _os.stat(f)
         sig = (st.st_ino, st.st_mtime_ns, st.st_size)
         with self._lock:
             hit = self._rootdir_cache.get(f)
             if hit is not None and hit[0] == sig:
                 return hit[1]
         per_bucket = M._read_rootdir(state_dir)
-        if per_bucket is None:
-            return None
         out = sorted(
             (name, (bool(d), s, b))
             for kids in per_bucket.values()
@@ -1225,7 +1194,7 @@ class MirrorSnapshot:
 
     def __init__(self, store: MirrorStore, version: int, state_dir: str,
                  n_buckets: int, summary: dict[int, int],
-                 totals: dict[int, tuple] | None = None):
+                 totals: dict[int, tuple]):
         self.store = store
         self.version = version
         self.state_dir = state_dir
@@ -1236,7 +1205,7 @@ class MirrorSnapshot:
         # evicts another bucket's hot entries), so misses take the
         # filtered-read path instead. Computed from the meta this
         # snapshot already read — no extra I/O per request.
-        self.point_reads = totals is not None and (
+        self.point_reads = (
             store.EST_DECODED_BYTES_PER_ROW
             * sum(t[0] for t in totals.values())
             > store.max_cache_bytes
@@ -1247,36 +1216,24 @@ class MirrorSnapshot:
 
         return f"bucket-{M._bucket(path, self.n_buckets):04d}.parquet"
 
-    def _admit_est(self, fname: str) -> int | None:
+    def _admit_est(self, fname: str) -> int:
         """Estimated decoded bytes of one bucket from the
         fold-maintained per-bucket node totals — what hot-bucket
-        admission checks against the cache headroom. None (legacy
-        state without totals) lets the store fall back to its
-        parquet-size estimate."""
-        if self.totals is None:
-            return None
+        admission checks against the cache headroom."""
         t = self.totals.get(int(fname[7:11]))
         return (
             0 if t is None
             else self.store.EST_DECODED_BYTES_PER_ROW * int(t[0])
         )
 
-    def _all_rows(self):
-        import os as _os
-
-        for fname in sorted(_os.listdir(self.state_dir)):
-            if fname.startswith("bucket-"):
-                yield from self.store._bucket_rows(self.state_dir, fname).items()
-
     def lookup(self, path: str) -> tuple:
         """(is_dir, size, bid) or NotFoundError. One bucket touched —
-        and for an oversized bucket, only the row group(s) holding the
+        and in point-read mode, only the row group(s) holding the
         path (MirrorStore._point_lookup)."""
         fname = self._fname_for(path)
         row = self.store._point_lookup(
             self.state_dir, fname, path,
-            force_point=self.point_reads,
-            admit_est=self._admit_est(fname),
+            self.point_reads, self._admit_est(fname),
         )
         if row is None:
             raise E.NotFoundError(path)
@@ -1285,100 +1242,69 @@ class MirrorSnapshot:
     def list_dir(self, path: str) -> list[tuple[str, tuple]]:
         """[(name, (is_dir, size, bid))] for the directory's direct
         children, read from the per-bucket children index (O(result),
-        no row scan) — or, for an oversized uncached bucket, a
-        prefix-range filtered parquet read (MirrorStore._dir_children;
+        no row scan) — or, in point-read mode for an uncached bucket,
+        a prefix-range filtered parquet read (MirrorStore._dir_children;
         one batched, Arrow-parallel dataset scan when the children
         span several buckets — _dir_children_multi).
         A dir at depth ≥ BUCKET_DEPTH lists from ONE bucket (the
         subtree shares its key prefix); a depth-1 dir lists from the
         buckets its top-group summary names; the root reads the
         fold-maintained rootdir sidecar and touches no data bucket."""
-        import os as _os
-
         from pufs_spark.streaming import mirror as M
 
         norm = path.rstrip("/") or "/"
         if norm == "/":
             # fold-maintained depth-1 entries: zero data-bucket reads
-            # (VERDICT r8 finding 1 — the old every-bucket sweep both
-            # cost thousands of parquet reads at the 10M-inode cap AND
+            # (VERDICT r8 finding 1 — an every-bucket sweep both cost
+            # thousands of parquet reads at the 10M-inode cap AND
             # evicted the hot lookup buckets from the byte-capped LRU)
-            fast = self.store._root_entries(self.state_dir)
-            if fast is not None:
-                return list(fast)
-            buckets = [  # pre-upgrade state: one sweep, next fold backfills
-                f
-                for f in sorted(_os.listdir(self.state_dir))
-                if f.startswith("bucket-")
+            return list(self.store._root_entries(self.state_dir))
+        fname = self._fname_for(norm)
+        row = self.store._point_lookup(
+            self.state_dir, fname, norm,
+            self.point_reads, self._admit_est(fname),
+        )
+        if row is None:
+            raise E.NotFoundError(norm)
+        if not row[0]:  # a file: same error the DataStore raises
+            raise E.NotDirError(norm)
+        depth = len([c for c in norm.strip("/").split("/") if c])
+        if depth < M.BUCKET_DEPTH:
+            buckets = [
+                f"bucket-{b:04d}.parquet"
+                for b in sorted(
+                    M._buckets_for_top(norm, self.n_buckets, self.summary)
+                )
             ]
         else:
-            fname = self._fname_for(norm)
-            row = self.store._point_lookup(
-                self.state_dir, fname, norm,
-                force_point=self.point_reads,
-                admit_est=self._admit_est(fname),
-            )
-            if row is None:
-                raise E.NotFoundError(norm)
-            if not row[0]:  # a file: same error the DataStore raises
-                raise E.NotDirError(norm)
-            depth = len([c for c in norm.strip("/").split("/") if c])
-            if depth < M.BUCKET_DEPTH:
-                buckets = [
-                    f"bucket-{b:04d}.parquet"
-                    for b in sorted(
-                        M._buckets_for_top(norm, self.n_buckets, self.summary)
-                    )
-                ]
-            else:
-                buckets = [
-                    f"bucket-{M._bucket(norm, self.n_buckets):04d}.parquet"
-                ]
+            buckets = [fname]
         if len(buckets) > 1:
-            # depth-1 (or legacy root sweep): one batched dataset scan
-            # over every point-read bucket instead of N sequential
-            # filtered reads (see _dir_children_multi)
+            # depth-1: one batched dataset scan over every point-read
+            # bucket instead of N sequential filtered reads (see
+            # _dir_children_multi)
             return sorted(
                 self.store._dir_children_multi(
-                    self.state_dir, buckets, norm,
-                    force_point=self.point_reads,
+                    self.state_dir, buckets, norm, self.point_reads,
                 )
             )
-        out: list[tuple[str, tuple]] = []
-        for fname in buckets:
-            out.extend(
-                self.store._dir_children(
-                    self.state_dir, fname, norm,
-                    force_point=self.point_reads,
-                    admit_est=self._admit_est(fname),
-                )
+        return sorted(
+            self.store._dir_children(
+                self.state_dir, buckets[0], norm,
+                self.point_reads, self._admit_est(buckets[0]),
             )
-        return sorted(out)
+        )
 
     def stat_totals(self) -> dict:
-        """Catalog totals. With fold-maintained per-bucket totals in
-        the meta (every state published since they exist), this is a
-        pure meta read — zero bucket files touched, O(n_buckets)
-        addition. The sweep below survives only for states that
-        predate the totals; the next fold backfills them."""
-        if self.totals is not None:
-            nodes = dirs = files = nbytes = 0
-            for n, d, f, by in self.totals.values():
-                nodes += n
-                dirs += d
-                files += f
-                nbytes += by
-            return {"nodes": nodes, "dirs": dirs, "files": files,
-                    "bytes": nbytes}
+        """Catalog totals from the fold-maintained per-bucket totals in
+        the meta — zero bucket files touched, O(n_buckets) addition."""
         nodes = dirs = files = nbytes = 0
-        for _, (is_dir, size, _bid) in self._all_rows():
-            nodes += 1
-            if is_dir:
-                dirs += 1
-            else:
-                files += 1
-                nbytes += size or 0
-        return {"nodes": nodes, "dirs": dirs, "files": files, "bytes": nbytes}
+        for n, d, f, by in self.totals.values():
+            nodes += n
+            dirs += d
+            files += f
+            nbytes += by
+        return {"nodes": nodes, "dirs": dirs, "files": files,
+                "bytes": nbytes}
 
 
 class MirrorService:
@@ -1554,20 +1480,20 @@ def serve(
 
 def serve_mirror(
     mirror_dir: str, cas=None, host: str = "127.0.0.1", port: int = 0,
-    max_cache_bytes: int | None = None, calibrate: bool = True,
+    max_cache_bytes: int | None = None,
 ) -> tuple[PufsServer, int]:
     """Serve the S12 surface from a streaming catalog mirror — the
     read path decoupled from the single-writer driver (see
     MirrorService). ``cas`` (a sources.cas.Freezer) additionally
     enables ranged ``read`` of frozen blocks. ``max_cache_bytes``
     bounds the decoded-bucket LRU (default MirrorStore 1 GiB) so the
-    server's memory is O(cap), not O(catalog). ``calibrate`` (default
-    on for a long-lived server: one smallest-bucket decode + one
-    filtered read, bounded ms) seeds the admission-cost EWMAs from
-    THIS box's storage instead of the class-constant defaults."""
+    server's memory is O(cap), not O(catalog). The store calibrates at
+    start (one smallest-bucket decode + one filtered read, bounded
+    ms), seeding the admission-cost EWMAs from THIS box's storage
+    instead of the class-constant defaults."""
     server = PufsServer(
         MirrorService(
-            MirrorStore(mirror_dir, max_cache_bytes, calibrate=calibrate),
+            MirrorStore(mirror_dir, max_cache_bytes, calibrate=True),
             cas,
         ),
         host, port,

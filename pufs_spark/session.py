@@ -94,15 +94,12 @@ def get_spark(
         # see _initial_shuffle_partitions.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            os.environ.get(
-                "PUFS_SHUFFLE_INITIAL",
-                str(
-                    _initial_shuffle_partitions(
-                        input_bytes,
-                        floor=max(shuffle_partitions, cpus),
-                        cap=max(shuffle_partitions, cpus * 32),
-                    )
-                ),
+            str(
+                _initial_shuffle_partitions(
+                    input_bytes,
+                    floor=max(shuffle_partitions, cpus),
+                    cap=max(shuffle_partitions, cpus * 32),
+                )
             ),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -130,10 +127,7 @@ def get_spark(
         # sf0.1; BY CONSTRUCTION no effect once input/cores exceeds
         # 4 MB — at sf10 splits are ~40 MB, at 100 TB they are
         # maxPartitionBytes-sized).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("PUFS_OPEN_COST", "1m"),
-        )
+        .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # In local mode the driver heap IS the executor heap: 8g split

@@ -50,6 +50,7 @@ import json
 import os
 import shutil
 
+from pufs_spark.catalog import errors as E
 from pufs_spark.catalog.commitlog import CommitLog
 from pufs_spark.catalog.datastore import DataStore
 
@@ -62,7 +63,7 @@ META_FILE = "mirror_meta.json"
 # in data buckets (VERDICT r8 finding 1).
 # The leading underscore matters: Spark's parquet reader skips
 # underscore-prefixed files (like _SUCCESS), so whole-state-dir reads
-# (read_mirror, re-bucket, depth migration) never try to parse it.
+# (read_mirror, re-bucket) never try to parse it.
 # COST BOUND (r9 verdict finding 4): the sidecar is rewritten whole on
 # every fold and returned whole on every root listing, so both are
 # O(top-level fanout). That is the intended catalog shape — an
@@ -83,9 +84,9 @@ ROOTDIR_FILE = "_rootdir.json"
 # serving under live folds measured ~26 qps vs 940 quiescent (r10
 # bench, BASELINE.md). Only the plain O(changed) delta arm emits it
 # (the diff needs the previous rows, already in hand there); rebuilds,
-# root wipes, migrations and re-buckets publish without one, and
-# serving falls back to the ordinary invalidate-and-reload. Buckets
-# whose net change exceeds DELTA_MAX_ROWS_PER_BUCKET are omitted —
+# root wipes and re-buckets publish without one, and serving falls
+# back to the ordinary invalidate-and-reload. Buckets whose net
+# change exceeds DELTA_MAX_ROWS_PER_BUCKET are omitted —
 # patching a delta that big approaches the decode it is meant to
 # avoid — as is everything past DELTA_MAX_TOTAL_ROWS per fold.
 DELTA_FILE = "_delta.json"
@@ -150,18 +151,15 @@ def _parse_summary(m: dict) -> dict[int, int]:
     }
 
 
-def _parse_totals(m: dict) -> dict[int, tuple[int, int, int, int]] | None:
-    """Per-bucket (nodes, dirs, files, bytes) from the meta, or None
-    for a state published before totals existed (readers fall back to
-    the bucket sweep; the next fold backfills)."""
-    if "totals" not in m:
-        return None
-    return {int(b): tuple(t) for b, t in m["totals"].items()}
+def _parse_totals(m: dict) -> dict[int, tuple[int, int, int, int]]:
+    """Per-bucket (nodes, dirs, files, bytes) from the meta ({} if no
+    state)."""
+    return {int(b): tuple(t) for b, t in m.get("totals", {}).items()}
 
 
 def _bucket_totals(items: dict) -> tuple[int, int, int, int]:
-    """(nodes, dirs, files, bytes) over one bucket's final rows — the
-    same accounting the serving sweep does, done once at fold time."""
+    """(nodes, dirs, files, bytes) over one bucket's final rows, done
+    once at fold time so serving's ``stat`` is a meta read."""
     nodes = len(items)
     dirs = sum(1 for d, _s, _b in items.values() if d)
     nbytes = sum((s or 0) for d, s, _b in items.values() if not d)
@@ -179,14 +177,12 @@ def _root_items(items: dict) -> dict[str, list]:
     return out
 
 
-def _read_rootdir(state_dir: str) -> dict[int, dict] | None:
+def _read_rootdir(state_dir: str) -> dict[int, dict]:
     """bucket → {name: [is_dir, size, bid]} from the state dir's
-    rootdir sidecar; None when the state predates it."""
-    f = os.path.join(state_dir, ROOTDIR_FILE)
-    if not os.path.exists(f):
-        return None
-    raw = json.load(open(f))
-    return {int(b): kids for b, kids in raw.get("buckets", {}).items()}
+    rootdir sidecar (FileNotFoundError once the dir is pruned)."""
+    with open(os.path.join(state_dir, ROOTDIR_FILE)) as f:
+        raw = json.load(f)
+    return {int(b): kids for b, kids in raw["buckets"].items()}
 
 
 def _write_rootdir(tmp_dir: str, root_by_bucket: dict[int, dict]) -> None:
@@ -203,14 +199,21 @@ def _write_rootdir(tmp_dir: str, root_by_bucket: dict[int, dict]) -> None:
         )
 
 
-def _load_meta(mirror_dir: str) -> tuple[int, int, dict[int, int]]:
-    """(last applied version, n_buckets, summary) where summary maps
-    bucket id → top-group bitmask (int); (-1, N_BUCKETS, {}) if no
-    state."""
-    m = _meta_dict(mirror_dir)
-    if not m:
-        return -1, N_BUCKETS, {}
-    return m.get("version", -1), m.get("n_buckets", N_BUCKETS), _parse_summary(m)
+def _check_format(mirror_dir: str, m: dict) -> None:
+    """Reject a published state the current writers would not produce:
+    one without per-bucket totals, or bucketed under another key
+    depth. Such a state is not migrated in place."""
+    if m.get("version", -1) < 0:
+        return
+    if "totals" in m and m.get("bucket_depth") == BUCKET_DEPTH:
+        return
+    raise E.MirrorFormatError(
+        f"mirror state in {mirror_dir} is in an old format (it needs "
+        f"bucket_depth {BUCKET_DEPTH} and per-bucket totals). The mirror "
+        f"is derived data: remove {mirror_dir} and the mirror query's "
+        "checkpoint dir, and the next start_catalog_mirror folds it "
+        "again from the commit log"
+    )
 
 
 def _resolve_state(mirror_dir: str) -> tuple[int, str, int, dict[int, int]]:
@@ -218,16 +221,18 @@ def _resolve_state(mirror_dir: str) -> tuple[int, str, int, dict[int, int]]:
     the consistent view a request/fold pins. The state dir is normally
     ``state-{version}``, but a bucket-count migration republishes the
     SAME version under a suffixed dir (meta key ``state_dirname``), so
-    resolve through the meta rather than deriving from the version."""
+    resolve through the meta rather than deriving from the version.
+    Raises MirrorFormatError for a state in an old format."""
     return _resolve_state_ex(mirror_dir)[:4]
 
 
 def _resolve_state_ex(
     mirror_dir: str,
-) -> tuple[int, str, int, dict[int, int], dict[int, tuple] | None]:
-    """``_resolve_state`` plus the per-bucket totals (None when the
-    state predates them) — still ONE meta read."""
+) -> tuple[int, str, int, dict[int, int], dict[int, tuple]]:
+    """``_resolve_state`` plus the per-bucket totals — still ONE meta
+    read."""
     m = _meta_dict(mirror_dir)
+    _check_format(mirror_dir, m)
     v = m.get("version", -1)
     dirname = m.get("state_dirname") or f"state-{v:012d}"
     return (
@@ -237,16 +242,6 @@ def _resolve_state_ex(
         _parse_summary(m),
         _parse_totals(m),
     )
-
-
-def _stored_bucket_depth(mirror_dir: str) -> int | None:
-    """The bucket-key depth the existing state was written under
-    (None if no state). A pre-round-6 mirror (no field recorded) was
-    depth 1."""
-    meta = os.path.join(mirror_dir, META_FILE)
-    if not os.path.exists(meta):
-        return None
-    return json.load(open(meta)).get("bucket_depth", 1)
 
 
 def _buckets_for_top(path: str, n_buckets: int, summary: dict[int, int]) -> set[int]:
@@ -316,9 +311,9 @@ def _publish_state(
     version: int,
     n_buckets: int,
     summary: dict[int, int],
+    totals: dict[int, tuple],
     prev_dir: str,
     keep_all: bool = False,
-    totals: dict[int, tuple] | None = None,
 ) -> None:
     """Publish a fully-built tmp state dir: rename it into place, swing
     the meta pointer atomically (version + bucket rule + count + the
@@ -331,8 +326,7 @@ def _publish_state(
     the NEXT fold prunes down to {current, previous} as usual.
 
     ``totals`` (bucket → (nodes, dirs, files, bytes)) makes ``stat``
-    a meta read instead of an every-bucket sweep; None only for
-    legacy callers, and readers then fall back to the sweep."""
+    a meta read instead of an every-bucket sweep."""
     if os.path.exists(new_dir):
         # replay of an already-published state: the existing dir IS
         # this fold's result (folding is idempotent) — keep it
@@ -349,11 +343,10 @@ def _publish_state(
             for b, bits in sorted(summary.items())
             if bits
         },
-    }
-    if totals is not None:
-        meta["totals"] = {
+        "totals": {
             str(b): list(t) for b, t in sorted(totals.items()) if t[0]
-        }
+        },
+    }
     mtmp = os.path.join(mirror_dir, META_FILE + f".tmp.{os.getpid()}")
     with open(mtmp, "w") as f:
         json.dump(meta, f)
@@ -395,36 +388,11 @@ def _save_state(
     (nodes, dirs, files, bytes) totals in the meta and the root
     listing's depth-1 entries in the state dir's rootdir sidecar —
     touched buckets recompute from their final rows (already in hand),
-    untouched buckets carry over. A previous state that predates the
-    aggregates is backfilled ONCE here (one streaming pass over the
-    untouched bucket files, bucket-at-a-time, no catalog-sized dict);
-    every state published after that upgrade pays O(changed) again."""
-    prev_meta = _meta_dict(mirror_dir)
-    prev_totals = _parse_totals(prev_meta)
+    untouched buckets carry over."""
+    prev_totals = _parse_totals(_meta_dict(mirror_dir))
     prev_root = _read_rootdir(prev_dir) if os.path.isdir(prev_dir) else {}
-    totals: dict[int, tuple] = {}
-    root_by_bucket: dict[int, dict] = {}
-    untouched = []
-    if os.path.isdir(prev_dir):
-        untouched = [
-            int(f[len("bucket-"):len("bucket-") + 4])
-            for f in os.listdir(prev_dir)
-            if f.startswith("bucket-") and
-            int(f[len("bucket-"):len("bucket-") + 4]) not in touched
-        ]
-    if prev_totals is not None and prev_root is not None:
-        totals = {b: t for b, t in prev_totals.items() if b not in touched}
-        root_by_bucket = {
-            b: k for b, k in prev_root.items() if b not in touched
-        }
-    else:
-        for b in untouched:  # one-time backfill of a pre-upgrade state
-            items = _load_buckets(prev_dir, [b], n_buckets)
-            if items:
-                totals[b] = _bucket_totals(items)
-                kids = _root_items(items)
-                if kids:
-                    root_by_bucket[b] = kids
+    totals = {b: t for b, t in prev_totals.items() if b not in touched}
+    root_by_bucket = {b: k for b, k in prev_root.items() if b not in touched}
     for b, items in touched.items():
         if items:
             totals[b] = _bucket_totals(items)
@@ -494,8 +462,8 @@ def _save_state(
                     f,
                 )
     _publish_state(
-        mirror_dir, tmp_dir, new_dir, version, n_buckets, summary, prev_dir,
-        keep_all=keep_all, totals=totals,
+        mirror_dir, tmp_dir, new_dir, version, n_buckets, summary, totals,
+        prev_dir, keep_all=keep_all,
     )
 
 
@@ -630,8 +598,8 @@ def _write_buckets_distributed(
     shutil.rmtree(out, ignore_errors=True)
     _write_rootdir(tmp_dir, root_by_bucket)
     _publish_state(
-        mirror_dir, tmp_dir, new_dir, version, n_buckets, summary, prev_dir,
-        keep_all=keep_all, totals=totals,
+        mirror_dir, tmp_dir, new_dir, version, n_buckets, summary, totals,
+        prev_dir, keep_all=keep_all,
     )
 
 
@@ -698,13 +666,12 @@ def _fold_rows(
     checkpoint marker forces a wholesale rebuild, which is exactly the
     cost profile of the commit log's own checkpoints.
 
-    With ``spark``, a wholesale rebuild (checkpoint marker, or a
-    bucket-rule migration) runs DISTRIBUTED — executors bucket the
-    exported path-state, the driver moves ≤ n_buckets files (the r6
-    verdict's last driver-memory ceiling, closed). Without it (direct-
-    call tests), the driver-dict fallback handles any catalog a test
-    builds. The delta arm is driver-side either way — it holds only
-    the touched buckets.
+    With ``spark``, a wholesale rebuild (checkpoint marker) runs
+    DISTRIBUTED — executors bucket the exported path-state, the
+    driver moves ≤ n_buckets files (the r6 verdict's last driver-
+    memory ceiling, closed). Without it (direct-call tests), the
+    driver-dict fallback handles any catalog a test builds. The delta
+    arm is driver-side either way — it holds only the touched buckets.
 
     Which buckets a row touches: an upsert (or an absent at depth ≥
     BUCKET_DEPTH, whose whole subtree shares the key prefix) touches
@@ -712,30 +679,26 @@ def _fold_rows(
     top-group summary names (superset, never a miss); an absent of
     "/" rewrites every bucket but LOADS none (nothing before the wipe
     survives, so the fold starts from empty state and applies only the
-    later versions)."""
+    later versions).
+
+    A state in an old format raises MirrorFormatError (see
+    ``_check_format``) instead of being migrated."""
     if not rows:
         return
     os.makedirs(mirror_dir, exist_ok=True)
     prev_version, _pd, stored_n, summary = _resolve_state(mirror_dir)
-    depth_migration = False
     if prev_version >= 0:
         n_buckets = stored_n  # existing state pins the bucket rule
-        # State written under a DIFFERENT bucket-key depth (e.g. a
-        # pre-round-6 depth-1 mirror) cannot be read bucket-locally —
-        # silently applying the current rule would load/rewrite the
-        # wrong buckets. Migrate wholesale (the full state is rule-
-        # independent): one catalog-sized fold, then O(changed) again.
-        depth_migration = _stored_bucket_depth(mirror_dir) != BUCKET_DEPTH
     by_version: dict[int, list] = {}
     for r in rows:
         by_version.setdefault(r["version"], []).append(r)
-    if max(by_version) <= prev_version and not depth_migration:
+    if max(by_version) <= prev_version:
         # pure replay: every version is already folded into the current
         # state — republishing would be harmless for a plain state dir
         # (the exists-branch keeps it), but after a SAME-VERSION
-        # suffixed publish (re-bucket r{n} / depth-migration d{n}) the
-        # plain ``state-{v}`` dir still exists under the OLD bucket
-        # rule, and re-pointing the meta at it with the new n_buckets
+        # suffixed re-bucket publish (r{n}) the plain ``state-{v}``
+        # dir still exists under the OLD bucket rule, and
+        # re-pointing the meta at it with the new n_buckets
         # would corrupt every bucket-local read. Skipping is the
         # correct idempotent behavior either way.
         return
@@ -762,68 +725,41 @@ def _fold_rows(
             }
             has_rebuild = False  # vc was the max: no checkpoint survives
     prev_dir = _pd if prev_version >= 0 else _state_dir(mirror_dir, -1)
-    if spark is not None and (has_rebuild or depth_migration):
-        if has_rebuild:
-            # rebuild at the LAST checkpoint version, distributed; any
-            # later delta versions in the batch fold on top bucket-
-            # locally (a recursive call with spark, no checkpoint left)
-            vc = max(
-                v
-                for v, rs in by_version.items()
-                if any(r["change"] == "checkpoint" for r in rs)
+    if spark is not None and has_rebuild:
+        # rebuild at the LAST checkpoint version, distributed; any
+        # later delta versions in the batch fold on top bucket-
+        # locally (a recursive call with spark, no checkpoint left)
+        vc = max(
+            v
+            for v, rs in by_version.items()
+            if any(r["change"] == "checkpoint" for r in rs)
+        )
+        if vc > prev_version:
+            _rebuild_state_distributed(
+                spark, root, mirror_dir, vc, n_buckets, prev_dir
             )
-            if vc > prev_version:
-                _rebuild_state_distributed(
-                    spark, root, mirror_dir, vc, n_buckets, prev_dir
-                )
-                rest = [
-                    r
-                    for rs in by_version.values()
-                    for r in rs
-                    if r["version"] > vc
-                ]
-            else:
-                # checkpoint already folded into the current state (a
-                # partially-replayed batch): rebuilding at vc would
-                # regress the meta — and after a same-version suffixed
-                # publish the stale plain ``state-{vc}`` dir could be
-                # mistaken for the rebuild's result under the wrong
-                # bucket rule. Fold only the genuinely new deltas.
-                rest = [
-                    r
-                    for rs in by_version.values()
-                    for r in rs
-                    if r["version"] > prev_version
-                ]
-        elif any(f.startswith("bucket-") for f in os.listdir(prev_dir)):
-            # bucket-rule (depth) migration: rewrite the CURRENT state
-            # under the current rule, executor-side, then fold the
-            # whole batch bucket-locally at the migrated state
-            _write_buckets_distributed(
-                spark,
-                spark.read.parquet(prev_dir),
-                mirror_dir,
-                prev_version,
-                n_buckets,
-                os.path.join(
-                    mirror_dir, f"state-{prev_version:012d}d{BUCKET_DEPTH}"
-                ),
-                prev_dir,
-                keep_all=True,  # the batch's own fold publishes next
-            )
-            rest = rows
+            rest = [
+                r for rs in by_version.values() for r in rs
+                if r["version"] > vc
+            ]
         else:
-            # empty state (no bucket files to migrate): just restamp
-            # the bucket rule via the driver arm below
-            rest = None
-        if rest is not None:
-            # keep_all: this callback already published (rebuild or
-            # migration) — the recursive publish must not prune the
-            # pre-callback dir out from under an in-flight reader; the
-            # next ordinary fold prunes down to {current, previous}
-            return _fold_rows(
-                root, mirror_dir, rest, n_buckets, spark, keep_all=True
-            )
+            # checkpoint already folded into the current state (a
+            # partially-replayed batch): rebuilding at vc would
+            # regress the meta — and after a same-version suffixed
+            # publish the stale plain ``state-{vc}`` dir could be
+            # mistaken for the rebuild's result under the wrong
+            # bucket rule. Fold only the genuinely new deltas.
+            rest = [
+                r for rs in by_version.values() for r in rs
+                if r["version"] > prev_version
+            ]
+        # keep_all: this callback already published the rebuild — the
+        # recursive publish must not prune the pre-callback dir out
+        # from under an in-flight reader; the next ordinary fold
+        # prunes down to {current, previous}
+        return _fold_rows(
+            root, mirror_dir, rest, n_buckets, spark, keep_all=True
+        )
     # A root absent ("/" removed) wipes EVERYTHING at its version, so
     # nothing before it — including the previous state — can survive
     # into the final fold: start from an empty state over all buckets
@@ -843,14 +779,14 @@ def _fold_rows(
         default=None,
     )
     prev_state: dict | None = None  # pre-fold rows, for the delta sidecar
-    if root_wipe is not None and not (has_rebuild or depth_migration):
+    if root_wipe is not None and not has_rebuild:
         wiped_last = max(max(by_version), prev_version)
         by_version = {v: rs for v, rs in by_version.items() if v > root_wipe}
         touched_ids = set(range(n_buckets))
         state: dict = {}
         last = wiped_last
     else:
-        if has_rebuild or depth_migration:
+        if has_rebuild:
             touched_ids = set(range(n_buckets))
         else:
             touched_ids = set()
@@ -869,7 +805,7 @@ def _fold_rows(
             if prev_version >= 0
             else {}
         )
-        if not (has_rebuild or depth_migration):
+        if not has_rebuild:
             # one shallow copy (values are immutable tuples): the
             # "before" side of the delta sidecar's net diff
             prev_state = dict(state)
@@ -886,8 +822,8 @@ def _fold_rows(
                 if r["change"] == "absent":
                     gone = r["path"]
                     if not [c for c in gone.strip("/").split("/") if c]:
-                        # root absent inside a checkpoint/migration
-                        # batch (the root_wipe fast path only covers
+                        # root absent inside a checkpoint batch
+                        # (the root_wipe fast path only covers
                         # plain-delta batches): "/" has no "//"-
                         # prefixed children, so the startswith scan
                         # below would delete ONLY the root row
@@ -1042,7 +978,7 @@ def start_catalog_mirror(
 def mirror_version(mirror_dir: str) -> int:
     """Last commit-log version applied to the mirror (-1 if none) —
     the staleness bound a mirror-backed reader should surface."""
-    return _load_meta(mirror_dir)[0]
+    return _meta_dict(mirror_dir).get("version", -1)
 
 
 def read_mirror(spark, mirror_dir: str):

@@ -39,26 +39,24 @@ _NANOS_TS_COLUMNS = {
 # A real service resolves a table reference once per session; the memo
 # does the same for the immutable driver testdata. No persist() — the
 # scan still reads parquet every execution; only the plan handle is
-# reused. Keyed per session (dead-session entries evicted like
-# _FS_MEMO); PUFS_ENTRY_CACHE=0 disables, matching the entry's memo
-# switch (plan-assert tests run cold).
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+# reused. The memo lives ON the session object (as _ship_package marks
+# the SparkContext), so it dies with its session and is never served
+# to another one: spark.newSession() shares the applicationId but not
+# SQL-conf state, and a key on id(spark) can be recycled once a
+# session is collected. A module-level WeakKeyDictionary keyed by the
+# session would never drop an entry — each value is a DataFrame that
+# holds its session. PUFS_ENTRY_CACHE=0 disables, matching the entry's
+# memo switch (plan-assert tests run cold).
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if os.environ.get("PUFS_ENTRY_CACHE", "1") != "1":
         return _load_table_uncached(spark, sf_dir, name)
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _TABLE_MEMO if k[0] != app_id]:
-        _TABLE_MEMO.pop(k, None)
-    # id(spark) in the key (ADVICE r15): spark.newSession() shares the
-    # applicationId but not SQL-conf state — a handle bound to another
-    # session of the same app must not be served across sessions.
-    key = (app_id, id(spark), os.path.abspath(sf_dir), name)
-    df = _TABLE_MEMO.get(key)
+    memo = spark.__dict__.setdefault("_pufs_table_memo", {})
+    key = (os.path.abspath(sf_dir), name)
+    df = memo.get(key)
     if df is None:
-        df = _load_table_uncached(spark, sf_dir, name)
-        _TABLE_MEMO[key] = df
+        df = memo[key] = _load_table_uncached(spark, sf_dir, name)
     return df
 
 

@@ -796,14 +796,22 @@ def test_mirror_skewed_catalog_stays_o_changed(spark, tmp_path):
     assert rows == {"/"}
 
 
-def test_mirror_bucket_depth_migration(spark, tmp_path):
-    """State written under a different bucket-key depth (e.g. a
-    pre-round-6 depth-1 mirror) must be migrated wholesale on the next
-    fold — reading it bucket-locally under the current rule would load
-    the wrong buckets silently."""
+def test_old_format_mirror_is_rejected_then_refolded(spark, tmp_path):
+    """A published mirror state the current writers would not produce
+    (a meta without per-bucket totals, or without the bucket-key
+    depth) is rejected with MirrorFormatError naming the mirror dir —
+    by the fold and by MirrorStore.snapshot() — and never migrated in
+    place. The mirror is derived data: removing it together with the
+    mirror query's checkpoint makes the next start_catalog_mirror fold
+    it again from the commit log, as the error message says."""
     import json as _json
+    import re
+    import shutil
 
+    from pufs_spark import serving
     from pufs_spark.catalog import commitlog as CL
+    from pufs_spark.catalog.errors import MirrorFormatError
+    from pufs_spark.sources.datasource import CDC_SCHEMA
     from pufs_spark.streaming import mirror as M
 
     root = str(tmp_path / "cat")
@@ -820,24 +828,45 @@ def test_mirror_bucket_depth_migration(spark, tmp_path):
         q.awaitTermination(120)
 
     refresh()
-    # simulate an old-rule mirror: strip the recorded depth
     meta_path = os.path.join(mdir, M.META_FILE)
-    meta = _json.load(open(meta_path))
-    del meta["bucket_depth"]
-    with open(meta_path, "w") as f:
-        _json.dump(meta, f)
+    good = _json.load(open(meta_path))
+    fields = [c.split()[0] for c in CDC_SCHEMA.split(", ")]
+    late = dict(zip(fields, (1, 0.0, "t", "delta", "upsert", "/data/late",
+                             False, 4, None)))
+    for key in ("totals", "bucket_depth"):
+        stripped = {k: v for k, v in good.items() if k != key}
+        with open(meta_path, "w") as f:
+            _json.dump(stripped, f)
+        with pytest.raises(MirrorFormatError, match=re.escape(mdir)):
+            serving.MirrorStore(mdir).snapshot()
+        with pytest.raises(MirrorFormatError, match=re.escape(mdir)) as ei:
+            M._fold_rows(root, mdir, [late], spark=spark)
+        assert "start_catalog_mirror" in str(ei.value)
+        resp = serving.MirrorService(serving.MirrorStore(mdir)).handle(
+            {"op": "stat"})
+        assert resp["errorMsg"].startswith("MirrorFormatError")
+        assert _json.load(open(meta_path)) == stripped  # left as found
 
+    # the streaming fold rejects it too, instead of migrating
     w.add_immutable_bytes(w.resolve_path("/data"), "late", b"late")
     log.commit(w)
-    refresh()                                   # fold must migrate
+    with pytest.raises(Exception, match="MirrorFormatError"):
+        refresh()
 
+    # remove the derived state and the next mirror start folds it again
+    shutil.rmtree(mdir)
+    shutil.rmtree(ckpt)
+    refresh()
     rows = {
-        r["path"]: (r["is_dir"], r["size"]) 
+        r["path"]: (r["is_dir"], r["size"])
         for r in M.read_mirror(spark, mdir).collect()
     }
     assert rows["/data/late"] == (False, 4)
     assert len(rows) == 2 + 8 + 1               # /, /data, 8 files, late
-    assert _json.load(open(meta_path))["bucket_depth"] == M.BUCKET_DEPTH
+    meta = _json.load(open(meta_path))
+    assert meta["bucket_depth"] == M.BUCKET_DEPTH and "totals" in meta
+    st = serving.MirrorStore(mdir).snapshot().stat_totals()
+    assert st["files"] == 9 and st["dirs"] == 2
 
 
 def test_cdc_replay_path_returns_iterator(tmp_path):

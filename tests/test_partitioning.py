@@ -111,65 +111,6 @@ def test_spread_for_compute_by_key_skips_payload_sort(spark):
     assert len(got) == 64 and got[3] == b"x3" * 200
 
 
-def test_estimated_scan_partitions_matches_exact_probe(spark, tmp_path):
-    """r15: spread_for_compute gates on a file-size ESTIMATE instead of
-    .rdd.getNumPartitions() (which costs a physical plan per call). The
-    estimate must agree with the exact probe on the frames that matter:
-    (a) a narrow scan-rooted frame (estimator path — no physical
-    planning), and (b) a frame with an explicit repartition, where the
-    file arithmetic is invalid and the fallback must return the
-    repartition's count (the r15 streaming-gate pin caught a double
-    exchange here)."""
-    import pandas as pd
-
-    from pufs_spark.operators.util import _estimated_scan_partitions
-
-    src = str(tmp_path / "small")
-    pd.DataFrame({"id": range(100), "text": ["x"] * 100}).to_parquet(
-        src + ".parquet", index=False
-    )
-    scan = spark.read.parquet(src + ".parquet").select("id", "text")
-    # (a) narrow scan: small single file -> both say 1 split
-    assert _estimated_scan_partitions(scan) == scan.rdd.getNumPartitions() == 1
-    # (b) repartitioned frame: fallback must see the explicit count,
-    #     not the file bytes
-    rep = scan.repartition(7)
-    assert _estimated_scan_partitions(rep) == 7
-    # (c) non-file frame: falls back to the exact probe
-    rng = spark.range(10).coalesce(2)
-    assert _estimated_scan_partitions(rng) == 2
-
-
-def test_estimated_scan_partitions_limit_sample_union(spark, tmp_path):
-    """VERDICT r15 #9 / ADVICE: the r15 substring denylist missed
-    GlobalLimit/Sample/Union-shaped plans (a limit collapses to ~1
-    partition at execution, so the file arithmetic over-estimates and
-    the spread gate would SKIP a needed repartition). The node-name
-    allowlist must route all three to the exact probe."""
-    import pandas as pd
-
-    from pufs_spark.operators.util import _estimated_scan_partitions
-
-    src = str(tmp_path / "lsu")
-    pd.DataFrame({"id": range(100), "text": ["x"] * 100}).to_parquet(
-        src + ".parquet", index=False
-    )
-    scan = spark.read.parquet(src + ".parquet").select("id", "text")
-    for shaped in (
-        scan.limit(5),
-        scan.sample(fraction=0.5, seed=7),
-        scan.union(scan),
-    ):
-        assert (
-            _estimated_scan_partitions(shaped)
-            == shaped.rdd.getNumPartitions()
-        ), shaped._jdf.queryExecution().analyzed().toString()
-    # and a column literally NAMED like a denylist word must not kick
-    # a plain scan off the estimator path (the r15 false-positive)
-    sortish = scan.select(F.col("id").alias("SortOrderJoin"), "text")
-    assert _estimated_scan_partitions(sortish) == 1
-
-
 def test_load_table_memoizes_handle_per_session(spark):
     """r15: load_table returns the SAME DataFrame handle for repeated
     calls (a ~95 ms path re-list + footer re-read per call otherwise),
@@ -203,3 +144,33 @@ def test_load_table_memoizes_handle_per_session(spark):
             _os.environ.pop("PUFS_ENTRY_CACHE", None)
         else:
             _os.environ["PUFS_ENTRY_CACHE"] = old
+
+
+def test_load_table_memo_dies_with_its_session(spark, monkeypatch):
+    """A memoized handle belongs to its session: it is never served to
+    another session (newSession shares the applicationId), and it dies
+    with its session instead of pinning the session for the life of
+    the process."""
+    import gc
+    import weakref
+
+    from pyspark import RDD
+
+    from pufs_spark.tables import load_table
+    from tests.conftest import SF_DIR
+
+    monkeypatch.setenv("PUFS_ENTRY_CACHE", "1")
+    # every new SparkSession rebinds RDD.toDF to a closure over itself;
+    # give the shared session its binding back afterwards
+    monkeypatch.setattr(RDD, "toDF", RDD.toDF)
+    main = load_table(spark, SF_DIR, "region")
+    other = spark.newSession()
+    mine = load_table(other, SF_DIR, "region")
+    assert mine is not main and mine.sparkSession is other
+    assert load_table(other, SF_DIR, "region") is mine
+    gone = weakref.ref(other)
+    del other, mine
+    spark.newSession()  # takes over RDD.toDF's reference
+    gc.collect()
+    assert gone() is None, "the table memo kept a dropped session alive"
+    assert load_table(spark, SF_DIR, "region") is main

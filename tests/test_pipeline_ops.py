@@ -45,6 +45,18 @@ def test_lang_id_deterministic(spark, docs):
     assert langs <= set(text.STOPWORDS) | {"und"}
 
 
+def test_lang_id_rejects_working_column_collision(spark):
+    """An input column named like lang_id's working column must not be
+    silently overwritten: a ValueError (which, unlike an assert, also
+    holds under python -O) names the column."""
+    df = spark.createDataFrame(
+        [(1, "the cat is here", "keep me")],
+        "doc_id long, text string, __pufs_toks string",
+    )
+    with pytest.raises(ValueError, match="__pufs_toks"):
+        text.lang_id(df)
+
+
 def test_fingerprint_collapses_formatting(spark):
     df = spark.createDataFrame(
         [(1, "Hello,   World!"), (2, "hello world"), (3, "different")],

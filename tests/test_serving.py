@@ -14,6 +14,27 @@ from pufs_spark.catalog.datastore import ROOT_INODE, DataStore
 from pufs_spark.sources.sparse import SparseFreezer
 
 
+def _decoded_rows(snap):
+    """Every (path, row) of a snapshot's state, decoded bucket by
+    bucket through its store's cache: the full-sweep oracle."""
+    for fname in sorted(os.listdir(snap.state_dir)):
+        if fname.startswith("bucket-"):
+            yield from snap.store._bucket_entry(
+                snap.state_dir, fname)[0].items()
+
+
+def _point_mode_store(mdir):
+    """A store whose cap sits one byte under the state's estimated
+    decoded size: every cache miss takes the point-read path, while
+    any single bucket still fits the cap (admission has headroom)."""
+    totals = serving.MirrorStore(mdir).snapshot().totals
+    est = serving.MirrorStore.EST_DECODED_BYTES_PER_ROW * sum(
+        t[0] for t in totals.values())
+    store = serving.MirrorStore(mdir, max_cache_bytes=est - 1)
+    assert store.snapshot().point_reads
+    return store
+
+
 @pytest.fixture()
 def served(tmp_path):
     store = DataStore(str(tmp_path))
@@ -389,7 +410,7 @@ def test_mirror_cache_is_byte_bounded_lru(spark, tmp_path):
     snap = unbounded.snapshot()
     # fault in every bucket explicitly (stat/root-listing no longer
     # touch data buckets — they read fold-maintained aggregates)
-    for _ in snap._all_rows():
+    for _ in _decoded_rows(snap):
         pass
     full = unbounded.cached_bytes()
     assert full > 0
@@ -448,12 +469,12 @@ def test_stat_and_root_listing_read_zero_data_buckets(spark, tmp_path):
             nfiles += 1
     M._fold_rows(str(tmp_path / "cat"), mdir, batch, spark=spark)
 
-    # the sweep's answers, as the oracle (forced via the fallback path)
+    # a full decode sweep's answers, as the oracle
     ref = serving.MirrorStore(mdir)
     snap = ref.snapshot()
     sweep_stat = {"nodes": 0, "dirs": 0, "files": 0, "bytes": 0}
     root_sweep = []
-    for p, (d, s, _b) in snap._all_rows():
+    for p, (d, s, _b) in _decoded_rows(snap):
         sweep_stat["nodes"] += 1
         if d:
             sweep_stat["dirs"] += 1
@@ -509,7 +530,7 @@ def test_stat_and_root_listing_read_zero_data_buckets(spark, tmp_path):
     # answers must also match a fresh full sweep after the fold
     snap2 = serving.MirrorStore(mdir).snapshot()
     resweep = {"nodes": 0, "dirs": 0, "files": 0, "bytes": 0}
-    for _p, (d, s, _b) in snap2._all_rows():
+    for _p, (d, s, _b) in _decoded_rows(snap2):
         resweep["nodes"] += 1
         if d:
             resweep["dirs"] += 1
@@ -522,10 +543,10 @@ def test_stat_and_root_listing_read_zero_data_buckets(spark, tmp_path):
 def test_oversized_bucket_point_reads_skip_cache(spark, tmp_path):
     """At 10M inodes / 64 buckets the decode-and-cache path collapsed
     (each getattr miss decoded a ~150k-row bucket and evicted ~50 MB
-    of hot entries — r9 bench). Above point_read_bytes a cache miss
-    must serve lookups and listings via filtered parquet reads:
-    answers identical to the decode path, ZERO bytes entering the
-    cache, same error taxonomy."""
+    of hot entries — r9 bench). When the state's estimated decoded
+    size exceeds the cap, a cache miss must serve lookups and listings
+    via filtered parquet reads: answers identical to the decode path,
+    ZERO bytes entering the cache, same error taxonomy."""
     from pufs_spark.catalog import errors as CE
     from pufs_spark.sources.datasource import CDC_SCHEMA
     from pufs_spark.streaming import mirror as M
@@ -549,7 +570,7 @@ def test_oversized_bucket_point_reads_skip_cache(spark, tmp_path):
     M._fold_rows(str(tmp_path / "cat"), mdir, batch, spark=spark)
 
     decode = serving.MirrorService(serving.MirrorStore(mdir))
-    pr_store = serving.MirrorStore(mdir, point_read_bytes=0)
+    pr_store = _point_mode_store(mdir)
     point = serving.MirrorService(pr_store)
 
     for req in (
@@ -571,10 +592,10 @@ def test_oversized_bucket_point_reads_skip_cache(spark, tmp_path):
     # and the decode path DID cache (the fast path for small buckets)
     assert decode.store.cached_bytes() > 0
 
-    # the PRIMARY trigger is decoded-state-vs-cap (parquet sizes
-    # under-trigger ~20x on sorted paths): a cap smaller than the
-    # estimated decoded catalog flips the whole snapshot to point
-    # reads even though every bucket is tiny on disk
+    # the trigger is decoded-state-vs-cap (parquet sizes under-
+    # trigger ~20x on sorted paths): a cap smaller than the estimated
+    # decoded catalog flips the whole snapshot to point reads even
+    # though every bucket is tiny on disk
     capped_store = serving.MirrorStore(mdir, max_cache_bytes=1000)
     capped = serving.MirrorService(capped_store)
     assert capped_store.snapshot().point_reads
@@ -629,11 +650,11 @@ def test_hot_bucket_admission_under_point_reads(spark, tmp_path):
         assert snap.lookup("/d3/f07") == (False, 307, "b-3-7")
     assert store.cached_bytes() == 0
 
-    # (2) roomy cap, point-read mode via point_read_bytes=0: the hot
-    # bucket is admitted on its K'th access and serves from the dict
-    hot = serving.MirrorStore(mdir, point_read_bytes=0)
+    # (2) cap just under the decoded state: point-read mode, yet any
+    # one bucket fits — the hot bucket is admitted on its K'th access
+    # and serves from the dict
+    hot = _point_mode_store(mdir)
     hsnap = hot.snapshot()
-    assert not hsnap.point_reads  # small catalog: bytes-trigger only
     for n in range(K - 1):
         assert hsnap.lookup("/d5/f11") == (False, 511, "b-5-11")
     assert hot.cached_bytes() == 0, "admitted before the K'th access"
@@ -649,7 +670,7 @@ def test_hot_bucket_admission_under_point_reads(spark, tmp_path):
     # depth-1 listings go through the batched multi-bucket scan and
     # never admit (one listing touching 64 buckets says nothing
     # about any single bucket's heat)
-    lst = serving.MirrorStore(mdir, point_read_bytes=0)
+    lst = _point_mode_store(mdir)
     lsnap = lst.snapshot()
     for _ in range(3):  # stays under the admission threshold
         wide = lsnap.list_dir("/d3")
@@ -690,7 +711,8 @@ def test_admission_insert_never_evicts_on_underestimate(spark, tmp_path):
     mdir = str(tmp_path / "mirror")
     M._fold_rows(str(tmp_path / "cat"), mdir, batch, spark=spark)
 
-    store = serving.MirrorStore(mdir, point_read_bytes=0)
+    store = _point_mode_store(mdir)
+    snap = store.snapshot()  # point mode is pinned for the snapshot
     store.POINT_ADMIT_AFTER = 1  # instance attr: admit on first read
     store.EST_DECODED_BYTES_PER_ROW = 0  # pre-check always sees room
     # also defeat the r11 parquet-size floor (EST_MIN_DECODE_RATIO):
@@ -698,7 +720,6 @@ def test_admission_insert_never_evicts_on_underestimate(spark, tmp_path):
     # failure the floor exists to prevent, to pin the LAST line of
     # defense (_cache_put's actual-size re-check)
     store.EST_MIN_DECODE_RATIO = 0
-    snap = store.snapshot()
 
     # admit one bucket legitimately, then shrink the cap around it so
     # nothing else fits without eviction
@@ -797,12 +818,12 @@ def test_failed_admission_insert_restores_counter(spark, tmp_path):
     restored (clamped at the threshold) so the bucket re-admits on its
     FIRST access after headroom appears."""
     mdir = _mini_mirror(spark, tmp_path, per=20)
-    store = serving.MirrorStore(mdir, point_read_bytes=0,
-                                max_cache_bytes=10)
+    store = serving.MirrorStore(mdir, max_cache_bytes=10)
+    snap = store.snapshot()  # 10-byte cap: point mode
+    assert snap.point_reads
     store.POINT_ADMIT_AFTER = 3
     store.EST_DECODED_BYTES_PER_ROW = 0  # pre-check est = 0: always room
     store.EST_MIN_DECODE_RATIO = 0      # defeat the r11 floor too
-    snap = store.snapshot()
     fname = snap._fname_for("/a/f0")
 
     # two sub-threshold point reads, then the 3rd admits -> decode ->
@@ -835,7 +856,7 @@ def test_measured_decode_corrects_floor_starvation(spark, tmp_path):
     measured the bucket's true footprint, the admission estimate must
     use it (scaled by parquet size) so the floor corrects downward."""
     mdir = _mini_mirror(spark, tmp_path, per=20)
-    store = serving.MirrorStore(mdir, point_read_bytes=0)
+    store = _point_mode_store(mdir)
     store.POINT_ADMIT_AFTER = 1
     store.POINT_ADMIT_CEIL = 1  # heat is instant: isolate the headroom
     # check, the part the floor starves
@@ -883,13 +904,13 @@ def test_hopeless_admission_never_attempts_decode(spark, tmp_path):
     bytes) bounds the estimate so hopeless buckets fail the headroom
     pre-check and never decode at all."""
     mdir = _mini_mirror(spark, tmp_path, per=40)
-    store = serving.MirrorStore(mdir, point_read_bytes=0,
-                                max_cache_bytes=1)
+    store = serving.MirrorStore(mdir, max_cache_bytes=1)
+    snap = store.snapshot()  # 1-byte cap: point mode
+    assert snap.point_reads
     store.POINT_ADMIT_AFTER = 1
     store.POINT_ADMIT_CEIL = 2  # reach the headroom check quickly —
     # the floor must reject there even once the bucket is "hot enough"
     store.EST_DECODED_BYTES_PER_ROW = 0  # the "corrupted tiny estimate"
-    snap = store.snapshot()
 
     for _ in range(5):
         assert snap.lookup("/a/f3") == (False, 13, "b-a-3")
@@ -946,71 +967,6 @@ def test_corrupt_delta_sidecar_falls_back_to_reload(spark, tmp_path):
         # still answers the new version correctly
         s2 = store.snapshot()
         assert s2.lookup("/a/f0") == (False, 999, "b-new")
-
-
-def test_pre_aggregate_state_falls_back_then_backfills(spark, tmp_path):
-    """A mirror state published before the fold-time aggregates
-    existed has no meta totals and no rootdir sidecar: serving must
-    fall back to the sweep (same answers), and the NEXT fold must
-    backfill both so the fast path engages."""
-    import json as _json
-    import os
-
-    from pufs_spark.sources.datasource import CDC_SCHEMA
-    from pufs_spark.streaming import mirror as M
-
-    fields = [c.split()[0] for c in CDC_SCHEMA.split(", ")]
-
-    def row(version, change, path, is_dir=None, size=None, bid=None):
-        return dict(zip(fields, (version, 0.0, "t", "delta", change, path,
-                                 is_dir, size, bid)))
-
-    mdir = str(tmp_path / "mirror")
-    batch = [row(1, "upsert", "/", True, 0, None)]
-    for i in range(6):
-        batch.append(row(1, "upsert", f"/t{i}", True, 0, None))
-        for j in range(4):
-            batch.append(row(1, "upsert", f"/t{i}/f{j}", False, i + j,
-                             f"b-{i}-{j}"))
-    M._fold_rows(str(tmp_path / "cat"), mdir, batch, spark=spark)
-
-    # simulate a pre-upgrade state: strip the aggregates
-    meta_path = os.path.join(mdir, M.META_FILE)
-    meta = _json.load(open(meta_path))
-    stripped = {k: v for k, v in meta.items() if k != "totals"}
-    with open(meta_path, "w") as f:
-        _json.dump(stripped, f)
-    sd = os.path.join(mdir, meta["state_dirname"])
-    os.remove(os.path.join(sd, M.ROOTDIR_FILE))
-
-    svc = serving.MirrorService(serving.MirrorStore(mdir))
-    st = svc.handle({"op": "stat"})
-    assert st["files"] == 24 and st["dirs"] == 7  # sweep fallback works
-    names = {e["name"] for e in
-             svc.handle({"op": "get_dir_contents", "path": "/"})["entries"]}
-    assert names == {f"t{i}" for i in range(6)}
-
-    # one delta fold backfills: totals + rootdir reappear, fast path on
-    M._fold_rows(str(tmp_path / "cat"), mdir,
-                 [row(2, "upsert", "/t0/f9", False, 100, "b-0-9")],
-                 spark=spark)
-    meta2 = _json.load(open(meta_path))
-    assert "totals" in meta2
-    store = serving.MirrorStore(mdir)
-    svc2 = serving.MirrorService(store)
-    reads = []
-
-    def counting(state_dir, fname, _orig=store._bucket_entry):
-        reads.append(fname)
-        return _orig(state_dir, fname)
-
-    store._bucket_entry = counting
-    st2 = svc2.handle({"op": "stat"})
-    names2 = {e["name"] for e in
-              svc2.handle({"op": "get_dir_contents", "path": "/"})["entries"]}
-    assert reads == []
-    assert st2["files"] == 25 and st2["bytes"] == st["bytes"] + 100
-    assert names2 == names
 
 
 def test_mirror_fleet_parity_folds_and_failover(spark, tmp_path):
@@ -1359,7 +1315,7 @@ def test_fold_delta_patch_preserves_admission(spark, tmp_path, monkeypatch):
                              i * 100 + j, f"b-{i}-{j}"))
     M._fold_rows(str(tmp_path / "cat"), mdir, batch, spark=spark)
 
-    store = serving.MirrorStore(mdir, point_read_bytes=0)
+    store = _point_mode_store(mdir)
     store.POINT_ADMIT_AFTER = 2
     snap = store.snapshot()
     for _ in range(2):  # second point read admits
@@ -1519,29 +1475,6 @@ def test_fold_delta_zero_change_restamps_resident(spark, tmp_path,
     assert new_sig != old_sig  # re-stamped to the new file's signature
 
 
-def test_fold_delta_patch_disable_knob(spark, tmp_path):
-    """DELTA_PATCH_ENABLED=False (operational escape hatch, the bench's
-    A/B switch) reverts folds to invalidate-and-reload: answers stay
-    correct, and the resident is re-decoded rather than patched."""
-    from pufs_spark.streaming import mirror as M
-
-    row = _cdc_row_factory()
-    mdir = str(tmp_path / "mirror")
-    M._fold_rows(str(tmp_path / "cat"), mdir,
-                 [row(1, "upsert", "/", True, 0, None),
-                  row(1, "upsert", "/a", True, 0, None),
-                  row(1, "upsert", "/a/f1", False, 11, None)],
-                 spark=spark)
-    store = serving.MirrorStore(mdir)
-    store.DELTA_PATCH_ENABLED = False  # instance attr
-    assert store.snapshot().lookup("/a/f1") == (False, 11, None)
-    M._fold_rows(str(tmp_path / "cat"), mdir,
-                 [row(2, "upsert", "/a/f1", False, 22, None)], spark=spark)
-    sd = M._resolve_state(mdir)[1]
-    assert os.path.exists(os.path.join(sd, M.DELTA_FILE))  # sidecar IS there
-    assert store.snapshot().lookup("/a/f1") == (False, 22, None)  # reload
-
-
 def test_cache_stats_observability(spark, tmp_path):
     """The mirror-only ``cache_stats`` op: the counters must separate
     warm-dict hits, fold patches, full decodes, filtered point reads
@@ -1570,9 +1503,13 @@ def test_cache_stats_observability(spark, tmp_path):
     assert st["point_reads"] == 0 and st["admissions"] == 0
 
     # point-read mode: filtered reads count; the K'th admits
-    pr = serving.MirrorStore(mdir, point_read_bytes=0)
+    pr = _point_mode_store(mdir)
+    psnap = pr.snapshot()  # point mode is pinned for this snapshot
+    # one bucket file's parquet-size floor (EST_MIN_DECODE_RATIO)
+    # exceeds this 12-row catalog's decoded estimate: lift the cap so
+    # the admission has headroom
+    pr.max_cache_bytes = serving.MirrorStore.DEFAULT_CACHE_BYTES
     pr.POINT_ADMIT_AFTER = 3
-    psnap = pr.snapshot()
     for _ in range(3):
         assert psnap.lookup("/a/f2") == (False, 2, None)
     st = pr.stats()
@@ -1707,10 +1644,10 @@ def test_passive_point_cost_measured_from_real_reads(spark, tmp_path):
     point-cost EWMA — the threshold tracks live storage with no
     explicit calibration step."""
     mdir = _mini_mirror(spark, tmp_path)
-    store = serving.MirrorStore(mdir, point_read_bytes=0,
-                                max_cache_bytes=1)
+    store = serving.MirrorStore(mdir, max_cache_bytes=1)
+    snap = store.snapshot()  # 1-byte cap: point mode
+    assert snap.point_reads
     store.EST_DECODED_BYTES_PER_ROW = 0  # floor threshold: never admit
-    snap = store.snapshot()
     assert store._cal_point_read_ms is None
     assert snap.lookup("/a/f1") == (False, 11, "b-a-1")
     assert snap.lookup("/a/f1") == (False, 11, "b-a-1")

@@ -44,15 +44,31 @@ def test_ship_package_does_not_accrete_temp_zips(spark, tmp_path, monkeypatch):
     - a planted orphan from a dead pid (the SIGKILL leak atexit cannot
       cover) is reaped at ship time — both dir-style and legacy
       flat-zip-style names;
-    - a live foreign driver's dir is left alone."""
+    - a live foreign driver's dir is left alone.
+
+    The ship runs against an isolated context: Spark's addPyFile and
+    the streaming planner's userFiles dir are stubbed, so the shared
+    SparkContext never sees the re-shipped zip. Registering a second
+    file under the name the session already shipped fails in Spark
+    whenever the contents differ, and every later task that fetches
+    the package then fails too."""
     import stat
     import tempfile
+
+    from pyspark.core.files import SparkFiles
 
     from pufs_spark import session as sess
 
     uid = os.getuid()
+    sc = spark.sparkContext
+    shipped: list = []
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(sess, "_pkg_dir", None)
+    monkeypatch.setattr(sc, "addPyFile", shipped.append)
+    userfiles = tmp_path / "userfiles"
+    monkeypatch.setattr(SparkFiles, "getRootDirectory",
+                        classmethod(lambda cls: str(userfiles)))
+    monkeypatch.setattr(sc, "_pufs_pkg_shipped", False)
 
     # Plant: a dead-pid dir, a dead-pid legacy flat zip, a live-pid dir.
     # pid 2**22+5 exceeds the kernel pid_max ceiling -> guaranteed dead.
@@ -65,17 +81,19 @@ def test_ship_package_does_not_accrete_temp_zips(spark, tmp_path, monkeypatch):
     live_dir = tmp_path / f"pufs_spark_pkg_{uid}_1_x2"  # pid 1 is alive
     live_dir.mkdir()
 
-    spark.sparkContext._pufs_pkg_shipped = False
     sess._ship_package(spark)
     first = sess._pkg_dir
     assert first and first.startswith(str(tmp_path))
     assert stat.S_IMODE(os.stat(first).st_mode) == 0o700
-    assert os.listdir(first) == [f"pufs_spark_pkg_{uid}_{os.getpid()}.zip"]
+    zip_name = f"pufs_spark_pkg_{uid}_{os.getpid()}.zip"
+    assert os.listdir(first) == [zip_name]
+    assert shipped == [os.path.join(first, zip_name)]
+    assert os.listdir(userfiles / "streaming_job") == [zip_name]
     assert not dead_dir.exists() and not dead_zip.exists(), "orphans not reaped"
     assert live_dir.exists(), "live foreign driver's dir was reaped"
 
     # Re-ship: same dir, same single file — nothing accretes.
-    spark.sparkContext._pufs_pkg_shipped = False
+    sc._pufs_pkg_shipped = False
     sess._ship_package(spark)
     assert sess._pkg_dir == first
     mine = [

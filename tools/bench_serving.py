@@ -358,18 +358,15 @@ def main() -> None:
             if pq_qps else None
         )
 
-        # zipf-skewed getattr UNDER LIVE FOLDS, A/B over the r10
+        # zipf-skewed getattr UNDER LIVE FOLDS, served through the r10
         # delta-sidecar cache patch. The writer here mutates the HOT
         # paths themselves (remove + re-add in one commit = a net size
         # change), so every fold touches an admitted resident bucket —
-        # the exact case the patch targets. Without the patch each such
-        # fold knocks the hot bucket out of the cache (fresh file
-        # signature): it re-earns admission (~break-even point reads)
-        # and re-decodes (~2 s at 156k rows) per fold. With it the
-        # resident is patched forward in O(batch). Both modes pay the
-        # same co-located fold cost (driver-side decode/rewrite of the
-        # touched buckets holds the GIL in this single-process bench),
-        # so the A/B isolates the cache effect.
+        # the exact case the patch targets: the resident is patched
+        # forward in O(batch) instead of re-earning admission and
+        # re-decoding (~2 s at 156k rows) per fold. The co-located fold
+        # cost (driver-side decode/rewrite of the touched buckets holds
+        # the GIL in this single-process bench) is part of this row.
         import collections
 
         hot = [p for p, _ in collections.Counter(zpaths).most_common(50)]
@@ -387,29 +384,24 @@ def main() -> None:
                 qq.awaitTermination(120)
                 timeline.append((time.monotonic(), log.current_version()))
 
-        for mode in ("patch", "no_patch"):
-            st = serving.MirrorStore(mdir)
-            if mode == "no_patch":
-                st.DELTA_PATCH_ENABLED = False  # instance attr A/B
-            srv = serving.PufsServer(
-                serving.MirrorService(st), "127.0.0.1", 0
-            )
-            threading.Thread(target=srv.serve_forever, daemon=True).start()
-            sport = srv.server_address[1]
-            samples, timeline = run_phase(
-                sport, zpaths, dirs, skew_secs, hot_writer, p_getattr=1.0
-            )
-            out["skew"][f"hot_folds_{mode}"] = {
-                **summarize(samples, timeline, skew_secs),
-                "cached_bytes": st.cached_bytes(),
-                # patches vs decodes is the fold-cadence-vs-patch-rate
-                # number the r10 verdict asked for: a healthy patched
-                # phase shows patches ~ folds x hot-buckets and decodes
-                # near the warmup count; decodes growing with folds
-                # means residents are falling back to reload
-                "cache_stats": st.stats(),
-            }
-            srv.shutdown()
+        st = serving.MirrorStore(mdir)
+        srv = serving.PufsServer(serving.MirrorService(st), "127.0.0.1", 0)
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        sport = srv.server_address[1]
+        samples, timeline = run_phase(
+            sport, zpaths, dirs, skew_secs, hot_writer, p_getattr=1.0
+        )
+        out["skew"]["hot_folds_patch"] = {
+            **summarize(samples, timeline, skew_secs),
+            "cached_bytes": st.cached_bytes(),
+            # patches vs decodes is the fold-cadence-vs-patch-rate
+            # number the r10 verdict asked for: a healthy phase shows
+            # patches ~ folds x hot-buckets and decodes near the warmup
+            # count; decodes growing with folds means residents are
+            # falling back to reload
+            "cache_stats": st.stats(),
+        }
+        srv.shutdown()
 
         # writer-ISOLATED single-process serving (r10 verdict task:
         # the co-located hot_folds rows above are confounded by the
